@@ -19,10 +19,11 @@ changed were omitted from the re-tier set). The records now used:
   with a fully-green row (rows + schema + hash all true) is its
   verification age.
 - ``PLANS.json`` (written by ``tools/plan_fingerprints.py``): each
-  query's canonicalized optimized-plan hash and the round that hash
+  query's normalized optimized-plan hash and the round that hash
   last changed. A plan change bumps the round, which makes every green
   row older than the change stale — the query re-enters tier 1 and
-  must re-earn a driver row. ``tests/test_registry.py`` fails if the
+  must re-earn a fully-green row.
+  ``tests/test_plans.py::TestPlanLedgerCurrent`` fails if the
   ledger does not match the live plans, so a plan change cannot skip
   the ledger.
 

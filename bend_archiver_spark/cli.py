@@ -185,7 +185,9 @@ def _archive_main(argv: list[str] | None = None) -> int:
                 source_df = (
                     spark.read.format(args.source_format).load(args.source_path)
                 )
-        else:
+        elif args.dry_run:
+            # only the dry run reads through this source; an archive run
+            # has JdbcArchiveJob plan (and probe) its own
             from .sources.jdbc import JdbcSource
 
             source_df = JdbcSource(spark, cfg).read()

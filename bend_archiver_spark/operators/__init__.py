@@ -23,6 +23,7 @@ from .similarity import (
     lsh_buckets,
     lsh_table_buckets,
 )
+from .ivf import ivf_search
 from .graph import bfs_hops, connected_components, label_propagation, triangle_counts
 from .skew import salted_join
 from .textops import quality_scores, token_stats
@@ -40,6 +41,7 @@ __all__ = [
     "cosine_topk",
     "cosine_pairs",
     "cosine_pairs_lsh",
+    "ivf_search",
     "lsh_table_buckets",
     "lsh_buckets",
     "salted_join",

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ivf import cell_distances, ivf_search
 from ..operators.similarity import QSCALE, explode_quantized
 from .base import fanout, register, t
 
@@ -71,7 +72,8 @@ def embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup reports cluster sizes and mean squared distance (rescaled
     to float units). This is the building block IVF index
     construction and balanced embedding sharding repeat per
-    iteration — with a trained codebook swapped in, the plan is
+    iteration (the same :func:`cell_distances` E-step
+    :func:`ivf_search` runs) — with a trained codebook swapped in, the plan is
     unchanged. The codebook explodes to 512 component rows and
     broadcasts; distances come from one fan-out join plus a map-side-
     combinable groupBy, so the pass over N vectors never shuffles
@@ -82,12 +84,7 @@ def embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.filter(F.col("vec_id") < _K)
         .select(F.col("vec_id").alias("cid"), "i", F.col("xq").alias("cq"))
     )
-    diff = F.col("xq") - F.col("cq")
-    d2 = (
-        e.join(F.broadcast(cent), "i")
-        .groupBy("vec_id", "cid")
-        .agg(F.sum(diff * diff).alias("dist"))
-    )
+    d2 = cell_distances(e, cent)
     win = Window.partitionBy("vec_id").orderBy("dist", "cid")
     assigned = d2.withColumn("rn", F.row_number().over(win)).filter(
         F.col("rn") == 1
@@ -243,54 +240,17 @@ FROM scored WHERE rank <= {_TOP_K}
 def ann_ivf_fixed_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full IVF search path — cell assignment, n_probe cell
     selection, candidate gather, exact cosine rerank — with a FIXED
-    16-vector codebook (vec_id < 16) instead of a trained one, which
-    makes every stage exact int64 arithmetic and therefore driver-
-    checkable end-to-end (ann_ivf_topk keeps the trained-KMeans
-    variant; its training is the one non-reproducible stage). Plan
-    shape is identical to production IVF: broadcast codebook, one
-    combinable groupBy for assignments, candidates shuffled only on
-    probed cells — never an all-pairs product."""
-    from ..operators.similarity import cosine_topk
-
-    emb = t(spark, sf_dir, "embeddings")
-    e = explode_quantized(emb, "vec_id", "embedding")
-    cent = e.filter(F.col("vec_id") < _N_CELLS).select(
-        F.col("vec_id").alias("cid"), "i", F.col("xq").alias("cq")
-    )
-    diff = F.col("xq") - F.col("cq")
-    d2 = (
-        e.join(F.broadcast(cent), "i")
-        .groupBy("vec_id", "cid")
-        .agg(F.sum(diff * diff).alias("dist"))
-    )
-    win = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    # persist barrier on the <= n_probe rows per vector (3 int64
-    # columns): `assigned` and `probes` both consume the ranking, and
-    # without it Catalyst re-derives the whole cell-assignment stage —
-    # corpus explode + broadcast E-step join + groupBy + window, the
-    # heaviest pass here — once per consumer. The ranking is
-    # deterministic (ties broken by cid), so the barrier cannot
-    # change rows. Callers clear cache between queries.
-    ranked = (
-        d2.withColumn("rn", F.row_number().over(win))
-        .filter(F.col("rn") <= _N_PROBE)
-        .persist()
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select("vec_id", "cid")
-    probes = ranked.filter(
-        (F.col("vec_id") < _N_QUERIES) & (F.col("rn") <= _N_PROBE)
-    ).select(F.col("vec_id").alias("query_id"), "cid")
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    return cosine_topk(
-        emb,
-        "vec_id",
+    16-vector codebook (vec_id < 16); ann_ivf_topk runs the same
+    search (operators/ivf.py) after one Lloyd step. Plan shape is
+    production IVF: broadcast codebook, one combinable groupBy for
+    assignments, candidates shuffled only on probed cells — never an
+    all-pairs product."""
+    return ivf_search(
+        t(spark, sf_dir, "embeddings"),
         "embedding",
         F.col("vec_id") < _N_QUERIES,
+        n_cells=_N_CELLS,
+        n_probe=_N_PROBE,
         k=_TOP_K,
-        candidates=cand,
+        lloyd_iters=0,
     )

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import similarity as ops
+from ..operators.ivf import ivf_search
 from .base import hash64_sql, register, t
 
 _TOP_K = 5
@@ -305,84 +306,16 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     M-step centroids re-quantized to rounded-integer component means),
     then queries probe their 2 nearest updated cells and candidates
     are exactly cosine-reranked to top-5. The data-adaptive
-    alternative to hyperplane LSH.
-
-    Deterministic training makes this fully hash-checkable against the
-    SQL oracle (it was rows-only while it used MLlib KMeans, whose
-    kmeans|| init is not cross-engine reproducible — that variant
-    remains available as operators/ivf.py for users who want many
-    iterations and sampled training). Integer-mean centroids lose
-    <1e-6 precision per component — far below cosine resolution — and
-    keep every distance exact int64. Scale shape is unchanged from
-    ann_ivf_fixed_codebook: broadcast codebook both passes, combinable
-    groupBys, candidates shuffled only on probed cells."""
-    emb = t(spark, sf_dir, "embeddings")
-    # persist barrier: the quantized explode has five consumers here
-    # (init filter, both E-step joins, the M-step join, and the rerank
-    # dots); without it CollapseProject re-inlines the round/cast HOF
-    # into each consumer (the minhash round-2 regression shape)
-    e = ops.explode_quantized(emb, "vec_id", "embedding").persist()
-    cent0 = e.filter(F.col("vec_id") < _N_CELLS).select(
-        F.col("vec_id").alias("cid"), "i", F.col("xq").alias("cq")
-    )
-    diff = F.col("xq") - F.col("cq")
-    d2a = (
-        e.join(F.broadcast(cent0), "i")
-        .groupBy("vec_id", "cid")
-        .agg(F.sum(diff * diff).alias("dist"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    a0 = (
-        d2a.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid")
-    )
-    cent1 = (
-        a0.join(e, "vec_id")
-        .groupBy("cid", "i")
-        .agg(
-            F.round(F.sum("xq").cast("double") / F.count(F.lit(1)), 0)
-            .cast("bigint")
-            .alias("cq")
-        )
-    )
-    d2b = (
-        e.join(F.broadcast(cent1), "i")
-        .groupBy("vec_id", "cid")
-        .agg(F.sum(diff * diff).alias("dist"))
-    )
-    # persist barrier on the <= n_probe rows per vector: `assigned`
-    # and `probes` both consume the second E-step's ranking, and
-    # without it Catalyst re-runs the ENTIRE training iteration —
-    # E-step 1 window, M-step centroid join, E-step 2 join + groupBy
-    # + window — once per consumer (the persisted `e` only stops the
-    # explode from re-running, not the stages above it). Ranking ties
-    # break deterministically by cid, so the barrier cannot change
-    # rows. Callers clear cache between queries.
-    ranked = (
-        d2b.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _N_PROBE)
-        .persist()
-    )
-    assigned = ranked.filter(F.col("rn") == 1).select("vec_id", "cid")
-    probes = ranked.filter(
-        (F.col("vec_id") < _N_QUERIES) & (F.col("rn") <= _N_PROBE)
-    ).select(F.col("vec_id").alias("query_id"), "cid")
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cid")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    return ops.cosine_topk(
-        emb,
-        "vec_id",
+    alternative to hyperplane LSH; ann_ivf_fixed_codebook is the same
+    search with the untrained seed codebook (operators/ivf.py)."""
+    return ivf_search(
+        t(spark, sf_dir, "embeddings"),
         "embedding",
         F.col("vec_id") < _N_QUERIES,
+        n_cells=_N_CELLS,
+        n_probe=_N_PROBE,
         k=_TOP_K,
-        candidates=cand,
+        lloyd_iters=1,
     )
 
 

@@ -22,18 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
 
 def _nano_ts_columns(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS), read from the footer."""
@@ -99,12 +87,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one synthetic table, normalizing nano-timestamps."""
     return load_parquet(spark, f"{sf_dir.rstrip('/')}/{name}.parquet")
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for ``spark.sql`` use."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

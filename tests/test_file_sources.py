@@ -1,5 +1,5 @@
 """CSV / NDJSON source round-trips (the reference's 'coming soon'
-source formats) and IVF operator shape."""
+source formats)."""
 
 import shutil
 

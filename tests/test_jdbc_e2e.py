@@ -486,3 +486,51 @@ class TestDecimal20JdbcE2E:
             )
         except Exception:
             pass  # Derby signals successful shutdown via SQLException
+
+
+class TestCliJdbcArchive:
+    def test_cli_archive_probes_source_once(
+        self, spark, derby, tmp_path, monkeypatch, capsys
+    ):
+        """A CLI archive run in JDBC mode probes the source bounds once:
+        the job plans its own read, so the CLI builds no source of its
+        own outside ``--dry-run``."""
+        import json
+
+        from bend_archiver_spark import cli
+        from bend_archiver_spark.sources.jdbc import JdbcSource
+
+        monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+        monkeypatch.setattr(spark, "stop", lambda: None)
+        calls = []
+        probe = JdbcSource.probe_bounds
+
+        def counting_probe(self):
+            calls.append(1)
+            return probe(self)
+
+        monkeypatch.setattr(JdbcSource, "probe_bounds", counting_probe)
+        conf = tmp_path / "conf.json"
+        conf.write_text(
+            json.dumps(
+                {
+                    "databaseType": "derby",
+                    "sourceDB": derby,
+                    "sourceTable": "TESTTAB",
+                    "sourceSplitKey": "ID",
+                    "sourceWhereCondition": "ID > 0",
+                    "batchSize": 50,
+                    "targetPath": str(tmp_path / "tgt_cli"),
+                    "targetFormat": "parquet",
+                }
+            )
+        )
+        assert cli.main(["--conf", str(conf)]) == 0
+        report = next(
+            json.loads(line)
+            for line in capsys.readouterr().out.splitlines()
+            if line.startswith("{") and '"verified"' in line
+        )
+        assert report["verified"] is True
+        assert report["source_rows"] == N_ROWS
+        assert len(calls) == 1

@@ -8,6 +8,7 @@ from bend_archiver_spark.operators import (
     cosine_pairs_lsh,
     cosine_topk,
     exact_dedup,
+    ivf_search,
     jaccard_pairs,
     label_propagation,
     minhash_lsh_dedup,
@@ -81,6 +82,22 @@ class TestSimilarityOps:
             cosines = [r.cosine for r in rows]
             assert cosines == sorted(cosines, reverse=True)
             assert all(r.neighbor_id != q for r in rows)
+
+    def test_ivf_probing_every_cell_is_brute_force(self, spark, sf_dir):
+        """With n_probe == n_cells every vector is a candidate, so IVF
+        returns exactly the brute-force top-k, trained or not."""
+        emb = load_table(spark, sf_dir, "embeddings")
+        queries = F.col("vec_id") < 3
+        brute = sorted(
+            cosine_topk(emb, "vec_id", "embedding", queries, k=4).collect()
+        )
+        for lloyd_iters in (0, 2):
+            ivf = ivf_search(
+                emb, "embedding", queries,
+                n_cells=4, n_probe=4, k=4, lloyd_iters=lloyd_iters,
+            )
+            assert sorted(ivf.collect()) == brute
+            spark.catalog.clearCache()
 
 
 class TestCosineLshRecall:

@@ -1636,6 +1636,44 @@ class TestPlanLedgerCurrent:
         )
 
 
+class TestPlanTextParallelismScrub:
+    def test_only_parallelism_valued_counts_are_scrubbed(self):
+        """Partition counts equal to the host's default parallelism are
+        host-dependent and normalized; any other count was chosen in
+        code and must stay visible to the fingerprint."""
+        from tools.plan_fingerprints import scrub_parallelism
+
+        plan = (
+            "Repartition 4, true\n"
+            "Repartition 40, true\n"
+            "Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM\n"
+            "Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM\n"
+            "Range (0, 10, step=1, splits=Some(4))\n"
+            "Range (0, 10, step=1, splits=Some(16))"
+        )
+        assert scrub_parallelism(plan, 4) == (
+            "Repartition <parallelism>, true\n"
+            "Repartition 40, true\n"
+            "Exchange RoundRobinPartitioning(<parallelism>), "
+            "REPARTITION_BY_NUM\n"
+            "Exchange RoundRobinPartitioning(8), REPARTITION_BY_NUM\n"
+            "Range (0, 10, step=1, splits=Some(<parallelism>))\n"
+            "Range (0, 10, step=1, splits=Some(16))"
+        )
+
+    def test_literal_equal_to_parallelism_is_scrubbed_too(self):
+        """The scrub sees only the number: a literal ``coalesce(1)``
+        is indistinguishable from the default on a 1-core host."""
+        from tools.plan_fingerprints import scrub_parallelism
+
+        assert scrub_parallelism("Repartition 1, false", 1) == (
+            "Repartition <parallelism>, false"
+        )
+        assert scrub_parallelism("Repartition 1, false", 4) == (
+            "Repartition 1, false"
+        )
+
+
 class TestCurateDocumentsSingleShuffle:
     def test_no_joins_one_exchange(self, spark, sf_dir):
         """Round 7: the quality gate is an inline scan predicate and

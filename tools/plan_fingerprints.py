@@ -8,9 +8,10 @@ rule being mechanized: **a query whose optimized Spark plan changed
 must re-earn a hash-checked driver row and a fresh 100x-sweep row.**
 
 Mechanism:
-- Every registry query's OPTIMIZED logical plan (canonicalized — the
-  engine's own exprId-normalized form — plus a volatile-token scrub for
-  temp paths and object addresses) is hashed and recorded in
+- Every registry query's OPTIMIZED logical plan (exprIds renumbered
+  by first appearance, plus a volatile-token scrub for temp paths,
+  object addresses and partition counts equal to the host's default
+  parallelism — see :func:`plan_text`) is hashed and recorded in
   ``PLANS.json`` with the round in which that hash last changed.
 - ``--update --round N`` recomputes all fingerprints, rolls changed /
   new queries' ``round`` forward to N, and records them in the
@@ -18,7 +19,7 @@ Mechanism:
   same round, resetting when the round advances).
 - ``__spark_entry__`` derives its re-tier set from ``changed`` — the
   set is GENERATED, never hand-written.
-- ``tests/test_registry.py::TestPlanFingerprints`` recomputes the live
+- ``tests/test_plans.py::TestPlanLedgerCurrent`` recomputes the live
   fingerprints and fails if any differ from PLANS.json — so a plan
   change that skipped the ledger cannot land.
 - Staleness lint: queries whose plan round is newer than their newest
@@ -63,6 +64,13 @@ _VOLATILE = (
     (re.compile(r"(FileScan \w+ \[[^\]]*\]).*"), r"\1"),
 )
 
+# partition counts the code takes from defaultParallelism (fanout(),
+# repartition(defaultParallelism), spark.range splits) print as the
+# host's core count; counts chosen in code stay literal
+_PARALLELISM_COUNT = re.compile(
+    r"(Repartition |RoundRobinPartitioning\(|splits=Some\()(\d+)\b"
+)
+
 _EXPR_ID = re.compile(r"#\d+")
 # lambda variables of higher-order functions (x_1 in a fresh session,
 # x_400 deep into a pytest run) and common-subexpression aliases
@@ -73,6 +81,24 @@ _EXPR_ID = re.compile(r"#\d+")
 # their literal digits are normalized, which no plan-change class we
 # care about hides behind.
 _LAMBDA_VAR = re.compile(r"\b([A-Za-z_]\w*?)_(\d+)(?=#)")
+
+
+def scrub_parallelism(p: str, parallelism: int) -> str:
+    """Replace the partition counts in :data:`_PARALLELISM_COUNT` that
+    equal ``parallelism`` with ``<parallelism>``, so the same plan
+    hashes identically on hosts with different core counts.
+
+    The match is by value only: a count written in code that happens
+    to equal the host's parallelism (``coalesce(1)`` on a 1-core host)
+    is scrubbed too. The ledger is therefore host-independent only on
+    hosts whose parallelism equals no literal count in the plans, and
+    there a swap between that literal and ``defaultParallelism`` goes
+    unseen."""
+    return _PARALLELISM_COUNT.sub(
+        lambda m: m.group(1)
+        + ("<parallelism>" if int(m.group(2)) == parallelism else m.group(2)),
+        p,
+    )
 
 
 def _renumber_expr_ids(p: str) -> str:
@@ -128,6 +154,7 @@ def plan_text(df) -> str:
         spark.conf.set("spark.sql.maxMetadataStringLength", prev)
     for rx, sub in _VOLATILE:
         p = rx.sub(sub, p)
+    p = scrub_parallelism(p, spark.sparkContext.defaultParallelism)
     return _renumber_expr_ids(p)
 
 
